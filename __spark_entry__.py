@@ -155,76 +155,28 @@ def _ordered(d: dict) -> dict:
     return {k: d[k] for k in keys}
 
 
+_QUERY_MODULES = ("nyc", "data", "tpch", "mining", "eval")
+
+
+def _merged(attr: str) -> dict:
+    """Union of ``attr`` over the five query modules, in registry order.
+    Every module is required: an import error propagates instead of
+    silently dropping that module's queries."""
+    import importlib
+
+    out: dict = {}
+    for mod in _QUERY_MODULES:
+        m = importlib.import_module(f"nyc_taxi_data_warehouse_spark.queries_{mod}")
+        out.update(getattr(m, attr))
+    return _ordered(out)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ the
     training-data-pipeline wave). Each callable: (spark, sf_dir) → DataFrame."""
-    from nyc_taxi_data_warehouse_spark.queries_nyc import QUERIES as NYC
-
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(NYC)
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_data import QUERIES as DATA
-
-        out.update(DATA)
-    except ImportError:
-        pass
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_tpch import QUERIES as TPCH
-
-        out.update(TPCH)
-    except ImportError:
-        pass
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_mining import (
-            QUERIES as MINING,
-        )
-
-        out.update(MINING)
-    except ImportError:
-        pass
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_eval import (
-            QUERIES as EVAL,
-        )
-
-        out.update(EVAL)
-    except ImportError:
-        pass
-    return _ordered(out)
+    return _merged("QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB twin for each query (tables pre-registered as views)."""
-    from nyc_taxi_data_warehouse_spark.queries_nyc import ORACLES as NYC
-
-    out: dict[str, str] = {}
-    out.update(NYC)
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_data import ORACLES as DATA
-
-        out.update(DATA)
-    except ImportError:
-        pass
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_tpch import ORACLES as TPCH
-
-        out.update(TPCH)
-    except ImportError:
-        pass
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_mining import (
-            ORACLES as MINING,
-        )
-
-        out.update(MINING)
-    except ImportError:
-        pass
-    try:
-        from nyc_taxi_data_warehouse_spark.queries_eval import (
-            ORACLES as EVAL,
-        )
-
-        out.update(EVAL)
-    except ImportError:
-        pass
-    return _ordered(out)
+    return _merged("ORACLES")

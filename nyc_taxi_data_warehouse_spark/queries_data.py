@@ -21,15 +21,11 @@ from .functions import text as T
 from .functions import vectors as V
 from .operators import dedup, similarity
 from .plans.nyc_views import load_tables
+from .queries_nyc import _rnd
 from .util import stream_state_partitions
 
 
 _KMEANS_QUANT = 1000  # embedding quantization lattice (SRP lesson)
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
 
 
 # --- corpora ---------------------------------------------------------------
@@ -3787,8 +3783,8 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Set SPARK_GRAFT_CC_SPILL=1 to route the edge set through a one-shot
     parquet spill (low-variance benchmark mode) instead of
-    localCheckpoint; results are identical. The spill lives in ONE fixed
-    per-process dir, overwritten on each invocation and removed at
+    localCheckpoint; results are identical. The spill lives in a fixed
+    per-process dir of its own, overwritten on each invocation and removed at
     interpreter exit — repeated bench runs reuse it instead of leaking a
     fresh materialized edge set into /tmp per run."""
     import os
@@ -3800,31 +3796,27 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = dedup.minhash_signatures(sh, num_hashes=_NH).persist()
     pairs = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, num_hashes=_NH))
     spill = (
-        _cc_spill_dir()
+        _cc_spill_dir("dedup")
         if os.environ.get("SPARK_GRAFT_CC_SPILL") == "1"
         else None
     )
-    # SPARK_GRAFT_CC_MODE=large_star opts into the O(log n) two-phase
-    # algorithm (chain-graph escape hatch); default min_label keeps the
-    # 2-3-round fast path for star/clique near-dup graphs AND the pinned
-    # driver hash (identical fixpoint, so the hash is mode-invariant —
-    # the env knob is for operational experimentation, not correctness)
+    # min_label: 2-3 rounds on star/clique near-dup graphs.  q_cc_two_phase
+    # runs this pipeline on large_star, which measured slower; both reach
+    # the same fixpoint, so the hash is the same
     return dedup.connected_components(
-        pairs,
-        corpus.select("doc_id"),
-        spill_dir=spill,
-        mode=os.environ.get("SPARK_GRAFT_CC_MODE", "min_label"),
+        pairs, corpus.select("doc_id"), spill_dir=spill
     )
 
 
-def _cc_spill_dir() -> str:
-    """Fixed per-process spill dir for q_dedup_cluster — see
-    :func:`.util.session_tmpdir` (the parquet write inside
-    connected_components uses mode=overwrite, so re-invocations reuse
-    the same path)."""
+def _cc_spill_dir(caller: str) -> str:
+    """Fixed per-process spill dir, one per calling query — see
+    :func:`.util.session_tmpdir`.  connected_components overwrites
+    ``<dir>/cc_edges`` while the frame is built and reads the edges back
+    from that path, so two queries sharing a dir would overwrite each
+    other's edge set; re-invocations of the same query reuse its path."""
     from .util import session_tmpdir
 
-    return session_tmpdir("cc_spill")
+    return session_tmpdir(f"cc_spill_{caller}")
 
 
 _SQL_DEDUP_CLUSTER = (
@@ -4402,7 +4394,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge set spills to one parquet scan instead of localCheckpoint
     # blocks (results identical; see connected_components docstring)
     spill = (
-        _cc_spill_dir()
+        _cc_spill_dir("split")
         if os.environ.get("SPARK_GRAFT_CC_SPILL") == "1"
         else None
     )

@@ -32,11 +32,7 @@ from .operators import graph
 from .operators.monitor import p2_formula
 from .operators.sampling import bucketed_value_cumsum
 from .plans.nyc_views import load_tables
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
+from .queries_nyc import _rnd
 
 
 # --- shared scored-documents base (the q_quality_model inference path) --------

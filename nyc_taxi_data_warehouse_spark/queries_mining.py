@@ -21,12 +21,8 @@ from pyspark.sql import functions as F
 from .operators.monitor import cusum_columns, p2_formula
 from .operators.sampling import bucketed_value_cumsum
 from .plans.nyc_views import load_tables
+from .queries_nyc import _rnd
 from .util import stream_state_partitions
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
 
 
 # --- CUSUM changepoint ------------------------------------------------------

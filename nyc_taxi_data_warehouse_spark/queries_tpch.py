@@ -51,11 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans import nyc_views
-
-
-def _rnd(c, n: int):
-    """Epsilon-shifted rounding (see queries_nyc._rnd)."""
-    return F.round(c + F.lit(1e-9), n)
+from .queries_nyc import _rnd
 
 
 def _ts(s: str):

@@ -5,6 +5,10 @@ and the driver's 50-slot check window is spent on unverified-first entries.
 
 from __future__ import annotations
 
+import sys
+
+import pytest
+
 import __spark_entry__ as entry
 
 
@@ -74,3 +78,13 @@ def test_round14_window_covers_unverified_rewrites():
     assert len(entry._CHECK_FIRST) == 50
     # the round-13 window (freshest driver evidence) sits at the tail
     assert entry._CHECK_LAST[-1] == "q_divergence_drift"
+
+
+def test_unimportable_query_module_fails_loudly(monkeypatch):
+    monkeypatch.setitem(
+        sys.modules, "nyc_taxi_data_warehouse_spark.queries_mining", None
+    )
+    with pytest.raises(ImportError):
+        entry.queries()
+    with pytest.raises(ImportError):
+        entry.oracle_sql()
