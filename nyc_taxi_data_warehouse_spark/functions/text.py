@@ -82,20 +82,12 @@ def stopword_hits_from_tokens(toks: Column | str, lang: str = "en") -> Column:
     return F.size(F.filter(_col(toks), lambda t: F.array_contains(sw, t))).cast("long")
 
 
-def stopword_hits(text: Column | str, lang: str = "en") -> Column:
-    return stopword_hits_from_tokens(tokens(text), lang)
-
-
 def stopword_ratio_from_tokens(toks: Column | str, lang: str = "en") -> Column:
     toks = _col(toks)
     return (
         stopword_hits_from_tokens(toks, lang)
         / F.greatest(word_count_from_tokens(toks), F.lit(1))
     ).cast("double")
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    return stopword_ratio_from_tokens(tokens(text), lang)
 
 
 def mean_word_length_from_tokens(toks: Column | str) -> Column:
@@ -140,10 +132,6 @@ def type_token_ratio_from_tokens(toks: Column | str) -> Column:
     ).cast("double")
 
 
-def type_token_ratio(text: Column | str) -> Column:
-    return type_token_ratio_from_tokens(tokens(text))
-
-
 def quality_score_from_tokens(text: Column | str, toks: Column | str) -> Column:
     """Composite document-quality score in [0,1]: rewards mid-length docs,
     lexical diversity, and low punctuation noise. Deterministic expression —
@@ -154,10 +142,6 @@ def quality_score_from_tokens(text: Column | str, toks: Column | str) -> Column:
     diversity_term = type_token_ratio_from_tokens(toks)
     noise_term = F.lit(1.0) - F.least(punct_ratio(text) * F.lit(4.0), F.lit(1.0))
     return ((length_term + diversity_term + noise_term) / F.lit(3.0)).cast("double")
-
-
-def quality_score(text: Column | str) -> Column:
-    return quality_score_from_tokens(text, tokens(text))
 
 
 def lang_guess_from_tokens(toks: Column | str) -> Column:
@@ -172,10 +156,6 @@ def lang_guess_from_tokens(toks: Column | str) -> Column:
     for lang in reversed(list(STOPWORDS)):
         expr = F.when((best > 0) & (hits[lang] == best), F.lit(lang)).otherwise(expr)
     return expr
-
-
-def lang_guess(text: Column | str) -> Column:
-    return lang_guess_from_tokens(tokens(text))
 
 
 def shingles_from_tokens(toks: Column | str, n: int = 3) -> Column:
@@ -207,30 +187,6 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     `tokens(...)` → :func:`shingles_from_tokens` split in hot paths (see its
     docstring for why)."""
     return shingles_from_tokens(tokens(text), n)
-
-
-def dup_token_frac_from_tokens(toks: Column | str) -> Column:
-    """Fraction of tokens that are repeats of an earlier token
-    (1 − distinct/total; 0 for empty docs) — the Gopher/RefinedWeb
-    within-document repetition rule at word grain."""
-    toks = _col(toks)
-    return (
-        F.lit(1.0)
-        - distinct_word_count_from_tokens(toks)
-        / F.greatest(word_count_from_tokens(toks), F.lit(1))
-    ).cast("double")
-
-
-def dup_ngram_frac_from_tokens(toks: Column | str, n: int = 3) -> Column:
-    """Fraction of word n-grams occurring more than once in the document
-    (1 − distinct/total; 0 when the doc has < n tokens). High values flag
-    boilerplate loops and degenerate generations."""
-    grams = shingles_from_tokens(_col(toks), n)
-    return (
-        F.lit(1.0)
-        - F.size(F.array_distinct(grams))
-        / F.greatest(F.size(grams), F.lit(1))
-    ).cast("double")
 
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"

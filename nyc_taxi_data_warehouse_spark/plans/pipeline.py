@@ -195,19 +195,3 @@ def register_views(spark: SparkSession, run: ModelRun) -> list[str]:
     for name, df in views.items():
         df.createOrReplaceTempView(name)
     return list(views)
-
-
-def persist_marts(run: ModelRun, base_path: str) -> None:
-    """Materialize marts as the lake tables (dbt table materialization)."""
-    from ..sources.sinks import write_partitioned_by_date
-
-    write_partitioned_by_date(run.mart_trips_weather, f"{base_path}/mart_trips_weather", "hour_ts")
-    run.mart_daily_metrics.write.mode("overwrite").parquet(
-        f"{base_path}/mart_daily_metrics"
-    )
-    run.mart_zone_analysis.write.mode("overwrite").parquet(
-        f"{base_path}/mart_zone_analysis"
-    )
-    run.fare_daily_features.write.mode("overwrite").parquet(
-        f"{base_path}/fare_daily_features"
-    )

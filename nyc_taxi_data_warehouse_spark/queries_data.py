@@ -11964,7 +11964,11 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampling bounds the exact-truth join quadratically (0.25× work at the
     50% default). Twin pairs survive at rate p, cross-doc pairs at p² —
     the sampled S-curve preserves the band-config ordering but shifts the
-    truth-set mix toward planted twins (see the module-level note)."""
+    truth-set mix toward planted twins (see the module-level note).
+
+    Candidates come only from band buckets of at most `_MAX_BUCKET`
+    members per config, the same hot-bucket cap as the dedup queries;
+    the oracle's `kept{r}` filter applies it on the DuckDB side."""
     from .operators import dedup as dd
     from .operators import sampling
 
@@ -12021,7 +12025,7 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bands = b if bands is None else bands.unionByName(b)
     keys = ("rows_per_band", "band", "bh")
-    g = dd._drop_hot(bands, _MAX_BUCKET, keys=keys).groupBy(*keys).agg(
+    g = dd.drop_hot_buckets(bands, _MAX_BUCKET, keys=keys).groupBy(*keys).agg(
         F.collect_list("doc_id").alias("__ids")
     )
     cands = (
@@ -12091,9 +12095,16 @@ def _sql_lsh_tuning() -> str:
 bands{bs} AS (
 {bands}
 ),
+kept{bs} AS (
+    SELECT band, bh FROM bands{bs}
+    GROUP BY 1, 2 HAVING count(*) <= {_MAX_BUCKET}
+),
+cbands{bs} AS (
+    SELECT bands{bs}.* FROM bands{bs} JOIN kept{bs} USING (band, bh)
+),
 cand{bs} AS (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands{bs} a JOIN bands{bs} b
+    FROM cbands{bs} a JOIN cbands{bs} b
       ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
 ),
 st{bs} AS (

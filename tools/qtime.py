@@ -2,7 +2,8 @@
 queries through the noop sink K times on an otherwise-idle session,
 reporting per-run wall seconds plus the Spark job/stage counts each run
 issued (statusTracker deltas) — the job count is the action/collect
-audit, the stage count tracks exchanges.
+audit, the stage count tracks exchanges — and the Janino compiles each
+run made (codegen-cache misses; 0 once a query's classes are cached).
 
 Usage:
     python tools/qtime.py [sf_dir] q_name [q_name ...]
@@ -19,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from nyc_taxi_data_warehouse_spark.session import get_spark
+from nyc_taxi_data_warehouse_spark.session import codegen_compiles, get_spark
 
 RUNS = int(os.environ.get("SPARK_GRAFT_QTIME_RUNS", "3"))
 
@@ -49,16 +50,18 @@ def main() -> None:
         for i in range(RUNS):
             j0 = len(tracker.getJobIdsForGroup(None) or [])
             sc.setJobGroup(f"qtime_{name}_{i}", name)
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.perf_counter() - t0
+            ncomp = codegen_compiles(spark) - c0
             jobs = tracker.getJobIdsForGroup(f"qtime_{name}_{i}") or []
             nstages = 0
             for j in jobs:
                 ji = tracker.getJobInfo(j)
                 if ji is not None:
                     nstages += len(ji.stageIds)
-            samples.append((dt, len(jobs), nstages))
+            samples.append((dt, len(jobs), nstages, ncomp))
             spark.catalog.clearCache()
             gc.collect()
             sc._jvm.System.gc()
@@ -66,9 +69,10 @@ def main() -> None:
         med = ts[len(ts) // 2] if RUNS % 2 else ts[len(ts) // 2 - 1]
         print(
             f"{name}: min={ts[0]:.2f} med={med:.2f} "
-            f"runs={[f'{t:.2f}' for t, _, _ in samples]} "
-            f"jobs={[j for _, j, _ in samples]} "
-            f"stages={[s for _, _, s in samples]}",
+            f"runs={[f'{s[0]:.2f}' for s in samples]} "
+            f"jobs={[s[1] for s in samples]} "
+            f"stages={[s[2] for s in samples]} "
+            f"compiles={[s[3] for s in samples]}",
             flush=True,
         )
 
