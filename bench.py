@@ -122,11 +122,11 @@ HEADLINE = [
     # and the wave's two heaviest: content-defined chunking (position
     # explode over corpus bytes) and the 3-config LSH tuning sweep.
     # COMPARABILITY NOTE: q_lsh_tuning's ground truth moved to a 50%
-    # content-hash doc sample in round 10 (SPARK_GRAFT_LSH_TUNE_PCT,
-    # default 50 — was effectively 100 through round 9), cutting the
-    # truth-join work ~4x; r9→r10 timings for this query are NOT
-    # comparable (7.91 s r9 vs 5.29 s r10 reflects the sample, not a
-    # plan change). See BASELINE.md "Round-10 q_lsh_tuning sampling".
+    # content-hash doc sample in round 10 (the full truth set through
+    # round 9), cutting the truth-join work ~4x; r9→r10 timings for this
+    # query are NOT comparable (7.91 s r9 vs 5.29 s r10 reflects the
+    # sample, not a plan change). See BASELINE.md "Round-10 q_lsh_tuning
+    # sampling".
     "q_cdc_chunking",
     "q_lsh_tuning",
     # round-8 additions: the mining/monitoring wave — prefix-identity
@@ -232,58 +232,12 @@ RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # low-variance benchmark mode for the iterative CC query: one-shot
-    # parquet spill of the edge set instead of deep-lineage localCheckpoint
-    os.environ.setdefault("SPARK_GRAFT_CC_SPILL", "1")
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm up the JVM / parquet footer caches AND the Python worker pool
-    # outside the timed region (first Arrow-UDF query otherwise pays ~5s of
-    # interpreter startup that is not plan cost)
-    spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    from pyspark.sql.functions import col, pandas_udf
-
-    # lambda form: `from __future__ import annotations` stringifies type
-    # hints, which pandas_udf's hint inference can't resolve
-    __warm = pandas_udf(lambda s: s, "long")
-    spark.range(256).repartition(32).select(__warm(col("id"))).count()
-
-    # warm the Structured Streaming machinery too: the FIRST availableNow
-    # drain of the session pays file-source discovery + memory-sink setup
-    # (~5-7s observed on q_stream_cusum) that is session cost, not plan
-    # cost — pay it once here so the stream queries' medians reflect
-    # steady state
-    from nyc_taxi_data_warehouse_spark.util import session_tmpdir
-
-    __wdir = session_tmpdir("bench_stream_warm")
-    spark.range(64).selectExpr(
-        "id", "timestamp_micros(CAST(id * 1000000 AS BIGINT)) AS ts"
-    ).write.mode("overwrite").parquet(__wdir)
-    from pyspark.sql import types as _ST
-
-    __wschema = _ST.StructType(
-        [
-            _ST.StructField("id", _ST.LongType()),
-            _ST.StructField("ts", _ST.TimestampType()),
-        ]
-    )
-    __wq = (
-        spark.readStream.schema(__wschema)
-        .parquet(__wdir)
-        .groupBy("ts")
-        .count()
-        .writeStream.format("memory")
-        .queryName("bench_stream_warm_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    __wq.awaitTermination(120)
-    __wq.stop()
+    warm_session(spark, sf_dir)
 
     import gc
 
@@ -329,6 +283,46 @@ def main() -> None:
             }
         )
     )
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs outside any timed region: the
+    JVM / parquet footer caches, the Python worker pool (the first
+    Arrow-UDF query otherwise pays ~5 s of interpreter startup that is not
+    plan cost), and the Structured Streaming machinery (the FIRST
+    availableNow drain pays file-source discovery + memory-sink setup,
+    ~5-7 s observed on q_stream_cusum)."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import col, pandas_udf
+
+    from nyc_taxi_data_warehouse_spark.util import session_tmpdir
+
+    spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    # lambda form: `from __future__ import annotations` stringifies type
+    # hints, which pandas_udf's hint inference can't resolve
+    ident = pandas_udf(lambda s: s, "long")
+    spark.range(256).repartition(32).select(ident(col("id"))).count()
+
+    wdir = session_tmpdir("bench_stream_warm")
+    spark.range(64).selectExpr(
+        "id", "timestamp_micros(CAST(id * 1000000 AS BIGINT)) AS ts"
+    ).write.mode("overwrite").parquet(wdir)
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("ts", T.TimestampType())]
+    )
+    q = (
+        spark.readStream.schema(schema)
+        .parquet(wdir)
+        .groupBy("ts")
+        .count()
+        .writeStream.format("memory")
+        .queryName("bench_stream_warm_sink")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    q.stop()
 
 
 if __name__ == "__main__":

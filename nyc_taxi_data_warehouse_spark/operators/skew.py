@@ -10,12 +10,12 @@ cases AQE can't fix:
   reducers — phase 2 re-aggregates the per-salt partials. Spark's partial
   (map-side) aggregation already handles most skew; salting matters when
   per-partition cardinality is so high the partial-agg hash map degrades.
-- `salted_broadcast_join`: replicate-the-small-side join for a skewed fact
-  key against a dimension too big to broadcast whole but small enough to
-  broadcast `n_salts` replicas of the hot keys' rows. The fact side gets a
-  random salt; the dim side is exploded over all salts.
+  Salts never leak into results.
+- `key_skew_report`: the diagnostic that says whether a key needs salting.
 
-Both preserve exact semantics — salts never leak into results.
+A hot join key against a small dimension needs no helper: broadcast the
+dim (``F.broadcast``) and the fact side is never shuffled, so no task
+owns the hot key.
 """
 
 from __future__ import annotations
@@ -52,35 +52,6 @@ def salted_agg(
     aggs += [F.sum(f"__cnt_{c}").alias(f"{c}_count") for c in counts]
     aggs += [F.sum(f"__sum_{c}").alias(f"{c}_sum") for c in sums]
     return phase1.groupBy(*keys).agg(*aggs)
-
-
-def salted_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "left",
-) -> DataFrame:
-    """Skew-safe equi-join: fact rows draw a random salt, dim rows replicate
-    across every salt, and the join runs on (key, salt) so a hot key spreads
-    over `n_salts` tasks instead of one straggler.
-
-    The replicated dim is broadcast EXPLICITLY (guide §3.1): replication
-    across salts only makes sense for a dim small enough to ship whole,
-    and relying on the planner's size estimate let the join silently
-    degrade to a sort-merge — re-shuffling the fact on (key, salt) and
-    giving back most of what the salt bought (the skew-torture test
-    caught exactly that under ``autoBroadcastJoinThreshold=-1``).  With
-    the hint the fact side is never shuffled at all; the salt then only
-    matters for DOWNSTREAM keyed ops, and the broadcast join is
-    hot-key-immune by construction.  Results are identical either way —
-    every fact row still meets exactly one dim replica."""
-    f = fact.withColumn("__salt", (F.rand(seed=42) * n_salts).cast("int"))
-    d = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = f.join(F.broadcast(d), on=[key, "__salt"], how=how)
-    return out.drop("__salt")
 
 
 def key_skew_report(

@@ -3779,44 +3779,17 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup clustering: LSH candidate pairs → connected components → one
     canonical (min-id) representative per near-dup cluster. The iterative
     min-label propagation has no single-query SQL form; the oracle uses a
-    recursive CTE reaching the same unique fixpoint.
-
-    Set SPARK_GRAFT_CC_SPILL=1 to route the edge set through a one-shot
-    parquet spill (low-variance benchmark mode) instead of
-    localCheckpoint; results are identical. The spill lives in a fixed
-    per-process dir of its own, overwritten on each invocation and removed at
-    interpreter exit — repeated bench runs reuse it instead of leaking a
-    fresh materialized edge set into /tmp per run."""
-    import os
-
+    recursive CTE reaching the same unique fixpoint."""
     corpus = _text_corpus(_docs(spark, sf_dir))
     sh = dedup.shingle_rows(corpus)
     # persisted: the capped pair generation consumes bands twice (hot-set
     # detection + the grouped collect); one short row per doc
     sig = dedup.minhash_signatures(sh, num_hashes=_NH).persist()
     pairs = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, num_hashes=_NH))
-    spill = (
-        _cc_spill_dir("dedup")
-        if os.environ.get("SPARK_GRAFT_CC_SPILL") == "1"
-        else None
-    )
     # min_label: 2-3 rounds on star/clique near-dup graphs.  q_cc_two_phase
     # runs this pipeline on large_star, which measured slower; both reach
     # the same fixpoint, so the hash is the same
-    return dedup.connected_components(
-        pairs, corpus.select("doc_id"), spill_dir=spill
-    )
-
-
-def _cc_spill_dir(caller: str) -> str:
-    """Fixed per-process spill dir, one per calling query — see
-    :func:`.util.session_tmpdir`.  connected_components overwrites
-    ``<dir>/cc_edges`` while the frame is built and reads the edges back
-    from that path, so two queries sharing a dir would overwrite each
-    other's edge set; re-invocations of the same query reuse its path."""
-    from .util import session_tmpdir
-
-    return session_tmpdir(f"cc_spill_{caller}")
+    return dedup.connected_components(pairs, corpus.select("doc_id"))
 
 
 _SQL_DEDUP_CLUSTER = (
@@ -4382,25 +4355,13 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the split is a pure map-side hash of the cluster key; the
     only extra cost over q_dedup_cluster is two tiny cluster-grain
     rollups."""
-    import os
-
     from .operators import sampling
 
     corpus = _text_corpus(_docs(spark, sf_dir))
     sh = dedup.shingle_rows(corpus)
     sig = dedup.minhash_signatures(sh, num_hashes=_NH).persist()
     pairs = dedup.lsh_candidate_pairs(dedup.lsh_bands(sig, num_hashes=_NH))
-    # honor the same low-variance benchmark knob as q_dedup_cluster: the
-    # edge set spills to one parquet scan instead of localCheckpoint
-    # blocks (results identical; see connected_components docstring)
-    spill = (
-        _cc_spill_dir("split")
-        if os.environ.get("SPARK_GRAFT_CC_SPILL") == "1"
-        else None
-    )
-    cl = dedup.connected_components(
-        pairs, corpus.select("doc_id"), spill_dir=spill
-    ).persist()
+    cl = dedup.connected_components(pairs, corpus.select("doc_id")).persist()
     d = sampling.train_val_test_split(cl, "cluster_id", salt="clsp")
     dd_ = sampling.train_val_test_split(cl, "doc_id", salt="clsp")
     leak = (
@@ -11910,41 +11871,9 @@ _LSH_J_NUM, _LSH_J_DEN = 1, 2  # truth threshold J >= 1/2, as a rational
 # skews toward twins — precision/recall are still consistent ratio
 # estimators WITHIN each pair class, and the S-curve ordering across band
 # configs is preserved, but the mixture differs from the full-truth run.
-# Override for a full-truth run with SPARK_GRAFT_LSH_TUNE_PCT=100.
-#
-# The env var is validated here but a BAD value must not poison the whole
-# module import (280+ unrelated queries live here) — parse failures defer
-# to q_lsh_tuning call time, which fails loud with the parse error.  The
-# oracle SQL embeds the import-time value, so changing the env var after
-# import is an ERROR q_lsh_tuning raises on (never silently ignored):
-# Spark and DuckDB would otherwise sample different truth sets.
-import os as _os
-
+# The oracle SQL embeds the same constant, so one edit changes both sides.
+_LSH_TUNE_PCT = 50
 _LSH_TUNE_SALT = "lshtune"
-
-
-def _parse_lsh_tune_pct() -> int:
-    raw = _os.environ.get("SPARK_GRAFT_LSH_TUNE_PCT", "50")
-    try:
-        pct = int(raw)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_LSH_TUNE_PCT must be an integer in [1, 100], got "
-            f"{raw!r}"
-        ) from None
-    if not 1 <= pct <= 100:
-        raise ValueError(
-            f"SPARK_GRAFT_LSH_TUNE_PCT must be in [1, 100], got {pct}"
-        )
-    return pct
-
-
-try:
-    _LSH_TUNE_PCT = _parse_lsh_tune_pct()
-    _LSH_TUNE_IMPORT_ERR: str | None = None
-except ValueError as _e:
-    _LSH_TUNE_PCT = 50  # placeholder so the module still imports
-    _LSH_TUNE_IMPORT_ERR = str(_e)
 
 
 def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11960,11 +11889,11 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles, so the truth set is complete without an all-pairs scan.
 
     The truth set is evaluated on a deterministic content-hash sample of
-    the base docs (default 50%, `SPARK_GRAFT_LSH_TUNE_PCT`): doc-level
-    sampling bounds the exact-truth join quadratically (0.25× work at the
-    50% default). Twin pairs survive at rate p, cross-doc pairs at p² —
-    the sampled S-curve preserves the band-config ordering but shifts the
-    truth-set mix toward planted twins (see the module-level note).
+    the base docs (`_LSH_TUNE_PCT`, 50%): doc-level sampling bounds the
+    exact-truth join quadratically (0.25× work at 50%). Twin pairs
+    survive at rate p, cross-doc pairs at p² — the sampled S-curve
+    preserves the band-config ordering but shifts the truth-set mix
+    toward planted twins (see the module-level note).
 
     Candidates come only from band buckets of at most `_MAX_BUCKET`
     members per config, the same hot-bucket cap as the dedup queries;
@@ -11972,20 +11901,9 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup as dd
     from .operators import sampling
 
-    if _LSH_TUNE_IMPORT_ERR is not None:
-        raise ValueError(_LSH_TUNE_IMPORT_ERR)
-    cur = _parse_lsh_tune_pct()
-    if cur != _LSH_TUNE_PCT:
-        raise RuntimeError(
-            "SPARK_GRAFT_LSH_TUNE_PCT changed after import "
-            f"({_LSH_TUNE_PCT} -> {cur}): the DuckDB oracle embedded the "
-            "import-time value; restart the process to change the rate"
-        )
-    base = _docs(spark, sf_dir)
-    if _LSH_TUNE_PCT < 100:
-        base = sampling.hash_sample(
-            base, "doc_id", _LSH_TUNE_PCT, salt=_LSH_TUNE_SALT
-        )
+    base = sampling.hash_sample(
+        _docs(spark, sf_dir), "doc_id", _LSH_TUNE_PCT, salt=_LSH_TUNE_SALT
+    )
     sh = dd.shingle_rows(_text_corpus(base)).persist()
     sig = dd.minhash_signatures(sh, num_hashes=_NH).persist()
     # grouped-array pair counts (dd.cooccur_pair_counts): one shuffle of

@@ -1669,13 +1669,10 @@ FROM lineitem GROUP BY 1, 2"""
 
 
 def q_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted replicate-the-dim join (`skew.py::salted_broadcast_join`),
-    driver-gated against the plain LEFT JOIN: the fact side draws a salt,
-    the dim replicates across all salts, and a hot part key spreads over
-    n_salts tasks — with results provably identical to the unsalted join
-    (every fact row still meets exactly one dim replica)."""
-    from .operators import skew
-
+    """Hot-key-safe LEFT JOIN of lineitem to part, oracle-gated against
+    the plain SQL join: the dim is broadcast explicitly, so the fact side
+    is never shuffled and no task owns a hot part key (a planner size
+    estimate would otherwise be free to pick a sort-merge join)."""
     t = nyc_views.load_tables(spark, sf_dir)
     fact = t["lineitem"].select(
         F.col("l_partkey").alias("p_partkey"),
@@ -1683,8 +1680,8 @@ def q_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price_units"
         ),
     )
-    out = skew.salted_broadcast_join(
-        fact, t["part"].select("p_partkey", "p_brand"), "p_partkey"
+    out = fact.join(
+        F.broadcast(t["part"].select("p_partkey", "p_brand")), "p_partkey", "left"
     )
     return out.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n_items"),

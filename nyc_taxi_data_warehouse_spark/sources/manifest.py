@@ -143,27 +143,18 @@ class ManifestTable:
 
     # -- write --------------------------------------------------------------
 
-    def _write_batch(self, df: DataFrame, rebalance: bool = False) -> list[str]:
+    def _write_batch(self, df: DataFrame) -> list[str]:
         """One immutable uniquely-named batch directory per write — never a
         rename, never an overwrite of an existing key.
 
-        ``rebalance`` adds an AQE REBALANCE hint so the write inherits
-        advisory-size file coalescing (guide §6 small-files).  It is OFF
-        by default: a write input whose plan ends in a shuffle (groupBy,
-        join — every signature-store append does) is ALREADY
-        advisory-sized by AQE partition coalescing, and since round 14
-        that includes persisted frames (`canChangeCachedPlanOutputPartitioning`),
-        so the hint there only adds a redundant Exchange per commit —
-        A/B at sf0.1: identical file counts (3 vs 3 across the
-        three-generation lifecycle) and ~0.6 s saved per lifecycle
-        without it; the round-13 unconditional hint was the likely cause
-        of that round's ingest regression.  Pass ``rebalance=True`` for
-        frames whose plan does NOT end in a shuffle (e.g. a narrow map
-        over a many-split scan), where nothing else sizes the output
-        files."""
+        No REBALANCE hint: a write whose plan ends in a shuffle (groupBy,
+        join — every signature-store append does) is already sized to the
+        advisory target by AQE partition coalescing, persisted frames
+        included, so the hint only added an Exchange per commit (A/B at
+        sf0.1: same file counts, ~0.6 s slower per three-generation
+        lifecycle)."""
         batch = os.path.join(self.data_dir, f"batch-{uuid.uuid4().hex}")
-        w = df.hint("rebalance") if rebalance else df
-        w.write.parquet(batch)
+        df.write.parquet(batch)
         return sorted(
             os.path.join(batch, f)
             for f in os.listdir(batch)
@@ -201,17 +192,15 @@ class ManifestTable:
             f"{self.path}: lost {self.max_retries} optimistic-commit races"
         )
 
-    def overwrite(self, df: DataFrame, rebalance: bool = False) -> int:
-        """Full-table replace. Returns the committed version.
-        ``rebalance``: see :meth:`_write_batch`."""
-        new = self._write_batch(df, rebalance=rebalance)
+    def overwrite(self, df: DataFrame) -> int:
+        """Full-table replace. Returns the committed version."""
+        new = self._write_batch(df)
         return self._commit(lambda base: new, "overwrite")
 
-    def append(self, df: DataFrame, rebalance: bool = False) -> int:
+    def append(self, df: DataFrame) -> int:
         """Append a batch. Concurrent appends both land (the loser's retry
-        recomputes against the winner's manifest). Returns the version.
-        ``rebalance``: see :meth:`_write_batch`."""
-        new = self._write_batch(df, rebalance=rebalance)
+        recomputes against the winner's manifest). Returns the version."""
+        new = self._write_batch(df)
         return self._commit(lambda base: base + new, "append")
 
     # -- maintenance --------------------------------------------------------

@@ -851,28 +851,6 @@ def test_connected_components_chain_and_singleton(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
-def test_connected_components_spill_variant_identical(spark, tmp_path):
-    """The parquet-spill edge materialization (benchmark/low-variance mode)
-    must produce the exact same components as the localCheckpoint path."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 20)], "doc_id long"
-    )
-    base = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs, nodes).collect()
-    }
-    spilled = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components(
-            pairs, nodes, spill_dir=str(tmp_path)
-        ).collect()
-    }
-    assert spilled == base == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
-
-
 def test_connected_components_two_phase_matches_min_label(spark):
     """large_star mode reaches the same unique fixpoint (component-min
     labels) as the default min-label propagation, on a mixed graph of
@@ -973,20 +951,23 @@ def test_salted_agg_counts_non_null(spark):
     assert got == {"a": (3, 2, 4.0), "b": (1, 0, None)}
 
 
-def test_salted_broadcast_join_matches_plain_join(spark, sf_dir):
-    from nyc_taxi_data_warehouse_spark.operators import skew
+def test_skew_join_plans_plain_broadcast(spark, sf_dir):
+    """q_skew_join broadcasts the part dim straight into the join: the
+    executed plan has a BroadcastHashJoin and no Generate/Expand (no salt
+    explode replicating the dim), and the LEFT join keeps every fact row."""
+    from nyc_taxi_data_warehouse_spark.queries_nyc import q_skew_join
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        F.col("p_partkey").alias("l_partkey"), "p_name"
-    )
-    got = skew.salted_broadcast_join(li, part, "l_partkey")
-    plain = li.join(part, "l_partkey", "left")
-    assert got.count() == plain.count()
-    assert got.where(F.col("p_name").isNull()).count() == plain.where(
-        F.col("p_name").isNull()
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    plain = li.join(part, li.l_partkey == part.p_partkey, "left")
+    got = q_skew_join(spark, sf_dir)
+    rows = got.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "Generate" not in plan and "Expand" not in plan
+    assert sum(r.n_items for r in rows) == plain.count()
+    assert sum(r.n_items for r in rows if r.p_brand is None) == plain.where(
+        F.col("p_brand").isNull()
     ).count()
 
 

@@ -1,10 +1,13 @@
 """Driver-contract registry invariants: every `queries()` entry carries an
 `oracle_sql()` twin, the stale-evidence rotation covers the whole registry,
 and the driver's 50-slot check window is spent on unverified-first entries.
+The engine reads no environment variable beyond the session sizing.
 """
 
 from __future__ import annotations
 
+import pathlib
+import re
 import sys
 
 import pytest
@@ -88,3 +91,19 @@ def test_unimportable_query_module_fails_loudly(monkeypatch):
         entry.queries()
     with pytest.raises(ImportError):
         entry.oracle_sql()
+
+
+def test_engine_reads_only_session_env_vars():
+    """The engine's only environment inputs size the Spark session; every
+    query runs one path whatever the environment says."""
+    pkg = pathlib.Path(entry.__file__).parent / "nyc_taxi_data_warehouse_spark"
+    found = {
+        m
+        for f in pkg.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read_text())
+    }
+    assert found == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+        "SPARK_GRAFT_DRIVER_MEM",
+    }

@@ -1,13 +1,12 @@
-"""Skew torture: 90%-one-key distributions against the salted operators.
+"""Skew torture: 90%-one-key distributions against the skew mitigations.
 
 Two claims, separately verified because they have different physics:
 
 - JOIN: a 90% hot key sends ~90% of the fact through ONE sort-merge task;
-  `salted_broadcast_join` spreads it over n_salts tasks. Wall time is
-  asserted with AQE's skew-join splitting disabled — AQE is the first-line
-  fix for exactly this shape (and stays ON in production configs); the
-  salted operator is for the cases AQE can't rewrite, so the test isolates
-  that path.
+  an explicitly broadcast dim never shuffles the fact, so no task owns
+  the hot key. Wall time is asserted with AQE's skew-join splitting
+  disabled — AQE is the first-line fix for exactly this shape (and stays
+  ON in production configs); the test isolates what the broadcast buys.
 - AGG: count/sum aggregates do NOT straggle under a hot key at any
   realistic scale, because map-side partial aggregation collapses the hot
   key to one row per map task before the shuffle. `salted_agg` exists for
@@ -62,29 +61,27 @@ def test_salted_join_beats_unsalted_on_90pct_hot_key(spark):
     }
     fact, dim = _skewed_fact(spark), _dim(spark)
     try:
-        # force the shuffle join (the scenario where the dim is too big to
-        # broadcast whole) and switch off AQE's skew splitting to isolate
-        # what the salt itself buys
+        # force the shuffle join for the unhinted plan and switch off AQE's
+        # skew splitting to isolate what the explicit broadcast buys
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
 
         plain = fact.join(dim, "k", "left").select("k", (F.col("x") * F.col("w")).alias("xw"))
-        salted = skew.salted_broadcast_join(fact, dim, "k").select(
+        bcast = fact.join(F.broadcast(dim), "k", "left").select(
             "k", (F.col("x") * F.col("w")).alias("xw")
         )
-        # row-for-row identical results first (salts never leak)
-        assert plain.count() == salted.count() == _N
+        # row-for-row identical results first
+        assert plain.count() == bcast.count() == _N
         a = plain.agg(F.sum("xw"), F.count("xw")).collect()[0]
-        b = salted.agg(F.sum("xw"), F.count("xw")).collect()[0]
+        b = bcast.agg(F.sum("xw"), F.count("xw")).collect()[0]
         assert a == b
 
         # min-of-2 wall time: first timed run also absorbs JIT/codegen
         t_plain = min(_run(plain) for _ in range(2))
-        t_salted = min(_run(salted) for _ in range(2))
-        # the hot key is ~90% of 2M rows in ONE task unsalted vs n_salts
-        # tasks salted; require a real margin so host noise can't produce
-        # a spurious pass in either direction
-        assert t_salted < t_plain, (t_salted, t_plain)
+        t_bcast = min(_run(bcast) for _ in range(2))
+        # the hot key is ~90% of 2M rows in ONE sort-merge task vs spread
+        # over the fact's scan tasks when broadcast
+        assert t_bcast < t_plain, (t_bcast, t_plain)
     finally:
         for k, v in saved.items():
             conf.set(k, v)

@@ -38,7 +38,7 @@ a grown dir like any sf dir.
 
 Each query gets one throwaway 1× run first (JIT, codegen, Python worker
 and streaming start-up are not plan cost), then one timed run per
-multiple, with the bench's spill mode and cache/GC hygiene between runs.
+multiple, with the bench's cache/GC hygiene between runs.
 A run past ``RUN_BUDGET_S`` is recorded as a runaway (its batch jobs
 are cancelled at the budget); a query that fails or runs away skips its
 larger multiples.  Queries that
@@ -209,8 +209,6 @@ def main() -> None:
 
         names = HEADLINE
 
-    # the bench's low-variance CC mode (edge-set spill), as bench.py sets it
-    os.environ.setdefault("SPARK_GRAFT_CC_SPILL", "1")
     import __spark_entry__ as entry_mod
     from nyc_taxi_data_warehouse_spark.session import get_spark
 
